@@ -724,18 +724,13 @@ final case class ZarrPartialAggReaderFactory(
         // decode overlaps IO across the uncovered range (same
         // discipline as the scan pipeline and analyze)
         val pf = new ChunkPrefetcher[Long, Map[String, Option[Array[Byte]]]](
-          (part.lo until part.hi).toIndexedSeq,
+          (part.lo until part.hi).iterator,
           o => {
             val idx = geom.chunkIndex(o)
             needCols.flatMap { c =>
               roleOf(c) match {
-                case DataCol(_) =>
-                  val m = byName(c)
-                  val key =
-                    if (geom.ndim == 1 && !mani.isEmpty)
-                      mani.keyFor(o).getOrElse(m.chunkKey(idx))
-                    else m.chunkKey(idx)
-                  Some(c -> store.readChunk(c, key))
+                case role: DataCol =>
+                  Some(c -> store.readChunk(c, mani.chunkKeyOf(role, idx, o)))
                 case CoordCol(_, _) => None // tiny + cached below
               }
             }.toMap
@@ -758,7 +753,7 @@ final case class ZarrPartialAggReaderFactory(
                 if (cached != null) cached
                 else {
                   val cc = ChunkColumn.decode(
-                    m, store.readChunk(c, m.chunkKey(Array(idx(dim)))))
+                    m, store.readChunk(c, mani.chunkKeyOf(role, idx, ord)))
                   coordCache.put(ck, cc)
                   cc
                 }

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.{Executors, Future => JFuture}
-
 import graft.zarr._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
@@ -13,9 +11,10 @@ import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
   * of chunk ordinals over the scan geometry's grid.
   *
   * Pipeline per chunk (mirrors `zarr_data_stream.rs:829-916`):
-  *  1. raw bytes of the *predicate* columns arrive (prefetched while the
-  *     previous chunk was being consumed — the reference's IO/compute
-  *     pipelining, `zarr_data_stream.rs:647-711`);
+  *  1. raw bytes of the *predicate* columns arrive (prefetched by the
+  *     [[graft.zarr.ChunkPrefetcher]] window while earlier chunks are
+  *     consumed — the reference's IO/compute pipelining,
+  *     `zarr_data_stream.rs:647-711`);
   *  2. decode them, evaluate the pushed filters with any-row semantics —
   *     no match → the whole chunk is skipped without reading the
   *     remaining columns;
@@ -133,25 +132,17 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
     }
   }
 
-  /** Coordinate chunk values for `name` at grid position `chunkIdx` —
-    * from the cache, else one (tiny) GET. Callable from IO threads.
-    * The cache-miss fetch resolves the key through the SAME manifest
-    * path [[chunkKeyFor]] applies (1-D manifest-keyed stores would
-    * otherwise decode fill values from an absent canonical key into the
-    * mask — unreachable today because 1-D coord chunks are never shared
-    * and the fetchBytes call always populates the cache first, but the
-    * invariant must not hinge on prefetch ordering). */
-  private def coordColumnFor(name: String, chunkIdx: Int): ChunkColumn = {
-    val key = s"$name/$chunkIdx"
+  /** Coordinate column `name`'s values for target chunk `idx` (ordinal
+    * `o`) — from the cache, else one (tiny) GET. Callable from IO
+    * threads. */
+  private def coordColumnFor(name: String, idx: Array[Int], o: Long): ChunkColumn = {
+    val role = roleOf(name)
+    val key = s"$name/${idx(coordDimOf(name))}"
     val cached = coordCache.get(key)
     if (cached != null) cached
     else {
-      val m = roleOf(name).meta
-      val storeKey =
-        if (geometry.ndim == 1 && !manifest.isEmpty)
-          manifest.keyFor(chunkIdx).getOrElse(m.chunkKey(Array(chunkIdx)))
-        else m.chunkKey(Array(chunkIdx))
-      val c = ChunkColumn.decode(m, f.store.readChunk(name, storeKey))
+      val c = ChunkColumn.decode(role.meta,
+        f.store.readChunk(name, manifest.chunkKeyOf(role, idx, o)))
       coordCache.putIfAbsent(key, c)
       c
     }
@@ -246,7 +237,7 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
       usable.flatMap(ChunkFilter.references).distinct
         .filter(coordDimOf.contains).map { n =>
           val dim = coordDimOf(n)
-          val col = coordColumnFor(n, idx(dim))
+          val col = coordColumnFor(n, idx, o)
           n -> Array.tabulate(grid(dim)) { gd =>
             val lo = gd * inner(dim)
             val hi = math.min((gd + 1).toLong * inner(dim), extent(dim).toLong).toInt
@@ -438,23 +429,6 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
     if (kept == nRows) null else java.util.Arrays.copyOf(keep, kept)
   }
 
-  /** Window depth AND IO thread count. The reference pipelines exactly
-    * one chunk ahead on one task (`zarr_data_stream.rs:647-711`); a
-    * single IO thread only overlaps IO with decode, which at
-    * object-store latency leaves the task IO-SERIAL (decode is
-    * microseconds, the 20 ms GETs dominate). Matching the pool to the
-    * window parallelizes the waits themselves — ~depth× on
-    * latency-bound scans (ScanBench r11) — while depth still bounds
-    * buffered chunks per task, and tasks × depth bounds the per-host
-    * in-flight GET budget. Results are consumed in submission (FIFO)
-    * order, so the coordInFlight/coordCache invariant below is
-    * completion-order-independent. */
-  private val prefetchDepth = 4
-
-  private val io = Executors.newFixedThreadPool(prefetchDepth, { r =>
-    val t = new Thread(r, "zarr-prefetch"); t.setDaemon(true); t
-  }: java.util.concurrent.ThreadFactory)
-
   /** Chunk-statistics sidecar segments overlapping this partition's chunk
     * range — the segment INDEX (names only) was listed ONCE on the driver
     * at planning and shipped in the factory, so each task pays just the
@@ -489,43 +463,18 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
     statsSegments.exists(seg => seg.contains(o) &&
       !ChunkStats.mayMatch(filters, col => seg.range(col, o)))
 
-  /** Manifest-keyed chunks (staged DSv2 commits) apply only to 1-D
-    * grids — the only shape the DSv2 writer produces. Declared BEFORE
-    * the eager `topUpPrefetch()` below, which already resolves keys. */
-  private val manifest = graft.zarr.ChunkManifest(f.manifestParts.toVector)
+  private val manifest = ChunkManifest(f.manifestParts.toVector)
   /** Coordinate chunk keys whose fetch has been SUBMITTED but not yet
-    * decoded into [[coordCache]]. The prefetch window submits up to
-    * [[prefetchDepth]] chunks before the first is decoded, and the cache
-    * is only written at decode time — without this set, every window
-    * slot re-fetches the same coordinate chunk (≈ depth−1 redundant GETs
-    * per coord chunk per grid row at object-store latency). Chunks are
-    * decoded in submission (FIFO) order, so a coord filtered here is
-    * always in the cache by the time a later chunk needs it. Declared
-    * BEFORE the eager `topUpPrefetch()` below. */
+    * decoded into [[coordCache]]. The window submits several chunks
+    * before the first is decoded, and the cache is only written at
+    * decode time — without this set, every window slot re-fetches the
+    * same coordinate chunk (≈ depth−1 redundant GETs per coord chunk per
+    * grid row at object-store latency). Chunks are decoded in submission
+    * (FIFO) order, so a coord filtered here is always in the cache by
+    * the time a later chunk needs it. Only the task thread touches it:
+    * the window pulls (and so resolves) items on the caller thread. */
   private val coordInFlight = new java.util.HashSet[String]()
-  private val inflightQ =
-    new java.util.ArrayDeque[(Long, JFuture[Fetched])]()
-  private var nextToSubmit: Long = part.lo
   private var current: ColumnarBatch = null
-
-  private def topUpPrefetch(): Unit =
-    while (inflightQ.size() < prefetchDepth && nextToSubmit < part.hi) {
-      val o = nextToSubmit
-      nextToSubmit += 1
-      if (!statsSkip(o))
-        inflightQ.addLast((o, submitFetch(o, phase1)))
-    }
-  topUpPrefetch()
-
-  private def chunkKeyFor(name: String, idx: Array[Int]): String = {
-    val m = roleOf(name) match { case DataCol(mm) => mm; case CoordCol(mm, _) => mm }
-    if (geometry.ndim == 1 && !manifest.isEmpty)
-      manifest.keyFor(idx(0)).getOrElse(m.chunkKey(Array(idx(0))))
-    else roleOf(name) match {
-      case DataCol(_) => m.chunkKey(idx)
-      case CoordCol(_, dim) => m.chunkKey(Array(idx(dim)))
-    }
-  }
 
   /** Resolve which (name, storage key) pairs chunk `o` actually needs —
     * cached and already-in-flight coordinate chunks are not re-fetched. */
@@ -538,22 +487,26 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
           !coordCache.containsKey(key) && coordInFlight.add(key)
         case _ => true
       }
-    }.map(n => n -> chunkKeyFor(n, idx))
+    }.map(n => n -> manifest.chunkKeyOf(roleOf(n), idx, o))
   }
 
-  /** Fetch raw bytes for `names` of chunk `o` on the IO thread. */
-  private def submitFetch(o: Long, names: Seq[String]): JFuture[Fetched] = {
-    val keys = resolveFetch(o, names)
-    io.submit(() => fetchBytes(o, keys))
-  }
+  /** Phase-1 fetches ride the shared ordered window ([[ChunkPrefetcher]],
+    * depth 4 on 4 IO threads): stats-skipped chunks are filtered before
+    * they take a slot, and keys resolve on this (task) thread at pull
+    * time. Declared after every val the fetches touch — the window
+    * starts fetching in its constructor. */
+  private val window = new ChunkPrefetcher[(Long, Seq[(String, String)]), (Long, Fetched)](
+    (part.lo until part.hi).iterator.filterNot(statsSkip)
+      .map(o => (o, resolveFetch(o, phase1))),
+    { case (o, keys) => (o, fetchBytes(o, keys)) })
 
   /** Fetch raw bytes for `names` of chunk `o` on the CALLER thread.
     * Phase-2 fetches use this: the caller blocks on the bytes anyway,
-    * and routing them through the prefetch pool would queue each
-    * matching chunk's phase-2 GET behind up to [[prefetchDepth]]
-    * in-flight speculative phase-1 prefetches (head-of-line blocking
-    * that serializes phase-2-dominated scans); inline, phase 2
-    * proceeds while the pool keeps prefetching phase 1 concurrently. */
+    * and routing them through the window would queue each matching
+    * chunk's phase-2 GET behind the in-flight speculative phase-1
+    * prefetches (head-of-line blocking that serializes
+    * phase-2-dominated scans); inline, phase 2 proceeds while the
+    * window keeps prefetching phase 1 concurrently. */
   private def fetchNow(o: Long, names: Seq[String]): Fetched =
     fetchBytes(o, resolveFetch(o, names))
 
@@ -612,21 +565,11 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
       if (pendingRows > 0) { current = emitPending(); return true }
       return false
     }
-    while (!inflightQ.isEmpty || nextToSubmit < part.hi) {
-      topUpPrefetch()
-      val entry = inflightQ.pollFirst()
-      if (entry == null) {
-        // every remaining chunk was stats-skipped without a fetch
-        if (pendingRows > 0) { current = emitPending(); return true }
-        return false
-      }
-      val (o, fut) = entry
+    while (window.hasNext) {
+      val (o, raw1) = window.next()
       val idx = geometry.chunkIndex(o)
       val extent = geometry.chunkExtent(idx)
       val nRows = extent.product
-      val raw1 = fut.get()
-      // keep the window full while we decode/filter/emit this chunk
-      topUpPrefetch()
 
       val phase1Cols: Map[String, (ChunkColumn, Array[Int])] =
         phase1.map { n =>
@@ -679,7 +622,7 @@ final class ZarrPartitionReader(f: ZarrReaderFactory, part: ZarrInputPartition)
   override def get(): ColumnarBatch = current
 
   override def close(): Unit = {
-    io.shutdownNow()
+    window.close()
     if (current != null) { current.close(); current = null }
   }
 }

@@ -52,20 +52,19 @@ final case class ChunkManifest(parts: Vector[(Long, String, Int)]) {
     None
   }
 
-  /** Storage key of array `m`'s chunk at row-major ordinal `ord` under
-    * geometry `g` — manifest-mapped when an entry exists, else the
-    * canonical key. ONE resolver for every ordinal-addressed consumer
-    * (the analyze job, vacuum's doc walk, incremental analyze's doc
-    * sweep), mirroring the scan's own resolution so a maintenance pass
-    * can never stat a different object than the reader fetches. */
-  def chunkKeyOf(m: ZarrArrayMeta, g: ScanGeometry, ord: Long): String =
-    chunkKeyOf(m, g.chunkIndex(ord), ord)
-
-  /** [[chunkKeyOf]] with the chunk index already in hand — per-ordinal
-    * loops compute it once and resolve keys for many columns. */
-  def chunkKeyOf(m: ZarrArrayMeta, idx: Array[Int], ord: Long): String =
-    if (isEmpty) m.chunkKey(idx)
-    else keyFor(ord).getOrElse(m.chunkKey(idx))
+  /** Storage key of column `role`'s chunk at target-grid index `idx`
+    * (row-major ordinal `ord`). ONE resolver for every ordinal-addressed
+    * consumer — the scan reader, the analyze job, the partial-aggregate
+    * scan, vacuum's doc walk and incremental analyze's doc sweep — so a
+    * maintenance pass can never stat a different object than the reader
+    * fetches. The manifest applies only on 1-D grids, the only shape the
+    * DSv2 writer stages; elsewhere (and for ordinals no part covers) the
+    * canonical key applies, a coordinate's at its own dimension. */
+  def chunkKeyOf(role: ColumnRole, idx: Array[Int], ord: Long): String =
+    (if (idx.length == 1) keyFor(ord) else None).getOrElse(role match {
+      case DataCol(m) => m.chunkKey(idx)
+      case CoordCol(m, dim) => m.chunkKey(Array(idx(dim)))
+    })
 
   /** JSON value for the root document attribute: `[[first,"dir",n],…]`. */
   def toJsonValue: String =

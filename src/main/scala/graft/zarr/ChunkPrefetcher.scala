@@ -2,51 +2,53 @@ package graft.zarr
 
 import java.util.concurrent.{Executors, Future => JFuture}
 
-/** Sliding-window CONCURRENT chunk prefetch for whole-range readers —
-  * `analyze` and the hybrid partial-aggregate scan, which previously
-  * issued one blocking GET per chunk per column. At object-store
-  * latency that serializes the whole range: 64 chunks × 2 columns ×
-  * 20 ms = 2.6 s per task of pure waiting, and decode is microseconds,
-  * so (unlike the main scan's single-IO-thread pipeline, whose win is
-  * decode/IO overlap) the lever here is GET CONCURRENCY — object
-  * stores serve parallel GETs at full per-request latency each. A
-  * window of `depth` fetches runs on `depth` daemon IO threads; depth
-  * bounds both memory (≤ depth raw chunks buffered) and the per-task
-  * request rate against the store (32 tasks × depth 4 = 128 in-flight
-  * GETs per executor host, a polite object-store budget).
+/** The ONE ordered, depth-bounded chunk-fetch window (the reference's
+  * IO/compute pipelining, `zarr_data_stream.rs:647-711`). Three callers:
+  * the main scan reader ([[graft.sources.ZarrPartitionReader]]'s phase-1
+  * fetches), `analyze`, and the hybrid partial-aggregate scan. At
+  * object-store latency decode is microseconds and the GETs dominate,
+  * so the lever is GET CONCURRENCY — object stores serve parallel GETs
+  * at full per-request latency each. A window of `depth` fetches runs on
+  * `depth` daemon IO threads; depth bounds both memory (≤ depth raw
+  * chunks buffered) and the per-task request rate against the store
+  * (32 tasks × depth 4 = 128 in-flight GETs per executor host, a polite
+  * object-store budget). The threads are started by the constructing
+  * (task) thread, so inheritable thread-locals follow the task.
   *
+  * `items` is pulled lazily, on the CALLER thread, only when a window
+  * slot frees up: an upstream `filterNot` (the reader's stats skip)
+  * takes no slot, and per-item state computed at pull time (the
+  * reader's in-flight coordinate dedup) needs no synchronisation.
   * Results are consumed strictly in submission order regardless of
   * completion order. `fetch` must be thread-safe (ZarrStore is: the
   * FileSystem handle is shared and Hadoop clients are concurrent).
   * Call `close()` when done (idempotent; also safe mid-range on error
-  * paths).
+  * paths and limits).
   */
 final class ChunkPrefetcher[A, B](
-    items: IndexedSeq[A],
+    items: Iterator[A],
     fetch: A => B,
     depth: Int = 4) extends AutoCloseable {
 
   private val io = Executors.newFixedThreadPool(math.max(1, depth), { r =>
-    val t = new Thread(r, "zarr-range-prefetch"); t.setDaemon(true); t
+    val t = new Thread(r, "zarr-prefetch"); t.setDaemon(true); t
   }: java.util.concurrent.ThreadFactory)
   private val inflight = new java.util.ArrayDeque[JFuture[B]]()
-  private var submitted = 0
-  private var consumed = 0
 
   private def topUp(): Unit =
-    while (inflight.size() < depth && submitted < items.length) {
-      val a = items(submitted)
-      submitted += 1
+    while (inflight.size() < depth && items.hasNext) {
+      val a = items.next()
       inflight.addLast(io.submit(() => fetch(a)))
     }
   topUp()
 
-  /** Result for the next item, blocking until its fetch completes. */
+  def hasNext: Boolean = !inflight.isEmpty
+
+  /** Result for the next item, blocking until its fetch completes. A
+    * fetch failure surfaces as its original exception, not wrapped. */
   def next(): B = {
-    if (consumed >= items.length)
-      throw new IllegalStateException("ChunkPrefetcher exhausted")
-    consumed += 1
     val f = inflight.pollFirst()
+    if (f == null) throw new IllegalStateException("ChunkPrefetcher exhausted")
     try f.get()
     catch {
       case e: java.util.concurrent.ExecutionException =>

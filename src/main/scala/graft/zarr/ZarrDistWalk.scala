@@ -232,8 +232,8 @@ private[zarr] object ZarrDistWalk {
               g.targetShape.toSeq, g.targetChunk.toSeq, g.dimIdentity) &&
               (d.cols.isEmpty || d.cols.exists { case (name, cs) =>
                 // the reader's freshness rule (ONE shared definition)
-                byName.get(name).exists(m => cs.freshAgainst(
-                  store.objectStat(m.name, mani.chunkKeyOf(m, g, ord))))
+                byName.get(name).exists(m => cs.freshAgainst(store.objectStat(
+                  m.name, mani.chunkKeyOf(DataCol(m), g.chunkIndex(ord), ord))))
               }))
           case None => false
         })
@@ -340,7 +340,7 @@ private[zarr] object ZarrDistWalk {
                     // definition, one HEAD through the scan's own key
                     // resolution)
                     cs.freshAgainst(store.objectStat(m.name,
-                      mani.chunkKeyOf(m, g, ord)))
+                      mani.chunkKeyOf(DataCol(m), g.chunkIndex(ord), ord)))
                 }
               }
           }

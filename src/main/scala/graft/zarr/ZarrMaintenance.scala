@@ -488,13 +488,13 @@ object ZarrMaintenance {
             // would serialize the whole range at object-store latency
             val pf = new ChunkPrefetcher[Long,
                 Map[String, (Option[Array[Byte]], Option[ZarrStore.ObjStat])]](
-              seg.toIndexedSeq.map(_.toLong),
+              seg.iterator,
               ord => {
                 val idx = g.chunkIndex(ord)
                 ms.flatMap { m =>
                   roleOf(m.name) match {
-                    case DataCol(_) =>
-                      val key = mani.chunkKeyOf(m, idx, ord)
+                    case role: DataCol =>
+                      val key = mani.chunkKeyOf(role, idx, ord)
                       // PRE-GET stat for sharded stats columns: the
                       // mtime freshness token must BRACKET the data
                       // read — a same-length (constant-length codec)
@@ -531,7 +531,7 @@ object ZarrMaintenance {
                       if (cached != null) cached
                       else {
                         val c = ChunkColumn.decode(
-                          m, st.readChunk(m.name, m.chunkKey(Array(idx(dim)))))
+                          m, st.readChunk(m.name, mani.chunkKeyOf(role, idx, ord)))
                         coordCache.put(ck, c)
                         c
                       }
@@ -561,7 +561,7 @@ object ZarrMaintenance {
                       // describe bytes the store no longer holds, and
                       // even a length-only record would let a
                       // constant-length rewrite pass the guard
-                      val key = mani.chunkKeyOf(m, idx, ord)
+                      val key = mani.chunkKeyOf(role, idx, ord)
                       val postStat = st.objectStat(m.name, key)
                       bytes match {
                         case Some(b) if postStat == preStat &&

@@ -143,18 +143,19 @@ class ShardedRangedReadSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   // ---- end-to-end scan behavior ----
 
-  /** lat/lon sharded store: data 32x32 in ONE 32x32 shard of 8x8 inner
-    * chunks (16 inner), coords plain-chunked at 32. */
-  private def buildLatLon(dir: String): Unit = {
+  /** lat/lon sharded store: data 32x32 in `chunk`x`chunk` shards of 8x8
+    * inner chunks (ONE shard of 16 inner at the default), coords
+    * plain-chunked at `chunk`. */
+  private def buildLatLon(dir: String, chunk: Int = 32): Unit = {
     LatencyFileSystem.reset(0)
     val st = ZarrStore(dir,
       Seq("fs.graftlat.impl" -> classOf[LatencyFileSystem].getName))
     st.writeStoreRootMeta()
-    ZarrWriter.writeArray(st, "lat", ZarrType.Float64, Seq(32), Seq(32),
+    ZarrWriter.writeArray(st, "lat", ZarrType.Float64, Seq(32), Seq(chunk),
       (0 until 32).map(_.toDouble), Some(Seq("lat")), ZarrWriter.CodecChain.bloscLz4)
-    ZarrWriter.writeArray(st, "lon", ZarrType.Float64, Seq(32), Seq(32),
+    ZarrWriter.writeArray(st, "lon", ZarrType.Float64, Seq(32), Seq(chunk),
       (0 until 32).map(_.toDouble), Some(Seq("lon")), ZarrWriter.CodecChain.bloscLz4)
-    ZarrWriter.writeArray(st, "data", ZarrType.Float64, Seq(32, 32), Seq(32, 32),
+    ZarrWriter.writeArray(st, "data", ZarrType.Float64, Seq(32, 32), Seq(chunk, chunk),
       (0 until 1024).map(_.toDouble), Some(Seq("lat", "lon")),
       ZarrWriter.CodecChain.bloscLz4.sharded(Seq(8, 8)))
   }
@@ -247,6 +248,23 @@ class ShardedRangedReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     hc.unset("graft.zarr.ranged.reads")
     assert(rows.length == 24)
     assert(LatencyFileSystem.chunkGets("e2e-datapred") == 3)
+  }
+
+  test("a 2-D grid read by one task opens each coordinate chunk exactly once") {
+    val dir = s"$base/e2e-grid"
+    // 4x4 grid of 8x8 shards: every lat chunk serves a row of 4 grid
+    // chunks, which the prefetch window submits together before the
+    // first decodes — the in-flight dedup must keep those to one GET
+    buildLatLon(dir, chunk = 8)
+    LatencyFileSystem.reset(0)
+    val rows = spark.read.format("zarr").option("partitions", "1")
+      .load(s"graftlat://$dir").collect()
+    assert(rows.length == 1024)
+    val coordOpens = LatencyFileSystem.opened.toArray.map(_.toString)
+      .filter(p => p.contains("/e2e-grid/lat/c/") || p.contains("/e2e-grid/lon/c/"))
+    assert(coordOpens.length == 8 && coordOpens.distinct.length == 8,
+      coordOpens.sorted.mkString(", "))
+    assert(LatencyFileSystem.chunkGets("e2e-grid") == 8 + 16)
   }
 
   test("edge shards: ranged reads trim to the valid extent like whole reads") {
